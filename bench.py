@@ -383,6 +383,8 @@ def bench_once_pinned(n_executors: int, sf_dir: str, n_convs: int,
 
 
 def main() -> None:
+    from morra_spark.session import host_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true",
                     help="run flagship at N and 4N pinned executors, report efficiency")
@@ -399,7 +401,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cores()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     if args.once is not None:

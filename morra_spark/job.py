@@ -39,7 +39,8 @@ def main() -> None:
                     choices=["joint", "combine"],
                     help="override the artifact's A12 NER mode for this run")
     ap.add_argument("--master", default=None,
-                    help="override master (default: local[$SPARK_GRAFT_CPUS]; "
+                    help="override master (default: local[<host cores>], or "
+                         "local[$SPARK_GRAFT_CPUS]; "
                          "unset under spark-submit which provides its own)")
     ap.add_argument("--materialize-graph", action="store_true",
                     help="also write the aggregated node/edge tables "

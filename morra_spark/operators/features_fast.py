@@ -228,6 +228,26 @@ def pos_feature_ids(model, bf: BatchFeatures,
     return ids
 
 
+def pos2_feature_ids(model, bf: BatchFeatures, pred_fwd: np.ndarray,
+                     pred_bwd: np.ndarray,
+                     pos_classes: list[str]) -> dict[str, np.ndarray]:
+    """Id arrays for the A8 level-2 POS model (families per
+    features.pos2_static_features: form suf3 shape first + the level-1
+    forward and backward predicted tags at i-1/i/i+1)."""
+    fams = model.families
+    ids = {
+        "form": _ids_for(fams["form"], bf.fn),
+        "suf3": _ids_for(fams["suf3"], bf.suf3),
+        "shape": _shape_ids(fams["shape"], bf),
+        "first": _first_ids(fams["first"], bf.seq_ids),
+    }
+    for pred, names in ((pred_fwd, ("f1", "f1p", "f1n")),
+                        (pred_bwd, ("b1", "b1p", "b1n"))):
+        tab = class_row_tables(model, names, pos_classes)
+        ids.update(tag_context_ids(tab, pred, bf.seq_ids, names))
+    return ids
+
+
 def ner_feature_ids(model, bf: BatchFeatures, upos_row_ids: dict,
                     gazetteer: dict[str, str]) -> dict[str, np.ndarray]:
     """``upos_row_ids``: per-family ('upos','pupos','nupos') id arrays of

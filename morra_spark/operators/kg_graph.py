@@ -425,14 +425,19 @@ def infer_node_types(nodes: DataFrame, edges: DataFrame, *,
     fractional similarity weights (no float-summation order
     sensitivity).
     """
+    if weight_col is not None and weight_col not in edges.columns:
+        # a misspelled weight column must not silently degrade the
+        # weighted vote to an unweighted one (ADVICE r5)
+        raise ValueError(f"weight_col {weight_col!r} not in edge columns "
+                         f"{edges.columns}; pass weight_col=None for an "
+                         "unweighted vote")
     # quantize to 1e6-grain longs (the embed_nodes discipline): a bare
     # cast("long") would truncate the fractional similarity weights the
     # docstring invites to 0, silently degenerating the weighted vote;
     # integer weights scale by exactly 1e6 so the vote and the
     # conf = _wmax/_wtot ratio are unchanged for them
     w = (F.round(F.col(weight_col) * 1e6).cast("long")
-         if weight_col is not None and weight_col in edges.columns
-         else F.lit(1_000_000).cast("long"))
+         if weight_col is not None else F.lit(1_000_000).cast("long"))
     e = edges.select(F.col(subj).alias("u"), F.col(obj).alias("v"),
                      w.alias("w"))
     sym = (e.unionByName(e.select(F.col("v").alias("u"),

@@ -22,26 +22,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def assemble_batch_flat(texts: list[str], seq_ids: np.ndarray,
-                        starts: np.ndarray, tok_starts: np.ndarray,
-                        tok_lens: np.ndarray, lemma: np.ndarray,
-                        upos: np.ndarray, ne: np.ndarray, forms: np.ndarray):
-    """Flat-output variant for the Arrow sink: returns
-    (row_ids, subj, pred, obj, subj_ne, obj_ne) parallel lists, row_ids
-    non-decreasing — ready for ``pa.ListArray.from_arrays`` offsets
-    without building any per-row dicts."""
-    _mcol, tcol = assemble_batch(texts, seq_ids, starts, tok_starts, tok_lens,
-                                 lemma, upos, ne, forms,
-                                 build_mentions=False)
-    row_ids, subj, pred, obj, s_ne, o_ne = [], [], [], [], [], []
-    for r, triples in enumerate(tcol):
-        for t in triples:
-            row_ids.append(r)
-            subj.append(t["subj"]); pred.append(t["pred"]); obj.append(t["obj"])
-            s_ne.append(t["subj_ne"]); o_ne.append(t["obj_ne"])
-    return row_ids, subj, pred, obj, s_ne, o_ne
-
-
 def assemble_batch(texts: list[str], seq_ids: np.ndarray, starts: np.ndarray,
                    tok_starts: np.ndarray, tok_lens: np.ndarray,
                    lemma: np.ndarray, upos: np.ndarray, ne: np.ndarray,

@@ -20,15 +20,16 @@ across all turns of an Arrow batch instead of one token at a time.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from morra_spark.operators import features as FT
-from morra_spark.operators.lemmatizer import lemmatize
+from morra_spark.operators import features_fast as FF
+from morra_spark.operators.ner_combine import (binary_margins,
+                                               combine_joint_separate)
 from morra_spark.operators.spans import assemble_batch
 from morra_spark.operators.tokenizer import tokenize_one
 
@@ -54,13 +55,12 @@ TRIPLES_ONLY_SCHEMA = f"conv_id string, turn_idx int, triples {TRIPLES_FIELD}"
 
 def _annotate_pdf(pdf: pd.DataFrame, model, triples_only: bool = False) -> pd.DataFrame:
     """Annotate one Arrow batch of turn rows. Pure function of (batch,
-    broadcast model) — unit-testable without Spark. Uses the Arrow-kernel
-    feature path (features_fast, bit-identical ids by parity test) and
-    falls back to the pandas reference path without pyarrow."""
+    broadcast model) — unit-testable without Spark. Features come from
+    the Arrow kernels in features_fast, whose ids equal the features.py
+    reference (the training path) by parity test."""
     # null text is EMPTY, not the string 'None': a bare astype(str)
     # stringifies None/NaN into a capitalized pseudo-token the NER can
-    # tag, minting phantom mentions/triples — and diverging from the
-    # mapInArrow sink, which already maps null -> '' (code-review r5)
+    # tag, minting phantom mentions/triples (code-review r5)
     texts = [t if isinstance(t, str) else "" for t in pdf["text"]]
     tok_lists = [tokenize_one(t) for t in texts]
 
@@ -112,12 +112,7 @@ def _annotate_pdf(pdf: pd.DataFrame, model, triples_only: bool = False) -> pd.Da
     return out
 
 
-try:
-    import pyarrow as _pa  # noqa: F401
-
-    _HAS_ARROW = True
-except ImportError:  # pragma: no cover
-    _HAS_ARROW = False
+_NER_CTX = ("upos", "pupos", "nupos")
 
 
 def _run_cascade(model, forms_list: list, seq_ids: np.ndarray,
@@ -125,135 +120,57 @@ def _run_cascade(model, forms_list: list, seq_ids: np.ndarray,
     """POS → lemma → NER(→combine) → FEATS over one flat token batch.
     Returns (upos, lemma, ne, feats_list-or-None) object arrays."""
     classes_pos = model.pos.classes
-    if _HAS_ARROW:
-        import pyarrow as pa
-
-        from morra_spark.operators import features_fast as FF
-
-        bf = FF.BatchFeatures(forms_list, seq_ids)
-        pos_ids = FF.pos_feature_ids(model.pos, bf, model.dict_tag)
-        pred = model.pos.decode_batch(model.pos.static_scores(pos_ids, n), starts)
-        # A8 two-pass ensemble (opt-in): backward level-1 pass + level-2
-        # model consuming both passes' context (incl. future tags).
-        # pos_mode='voting' adds the level-3 ensemble on top:
-        # [PK] morra/morph_parser3.py::MorphParser3 — per-token majority
-        # vote over the variant taggers (fwd, bwd, level-2); with three
-        # voters any 2-1 agreement wins and a 1-1-1 split falls to the
-        # strongest variant (level-2), so the vote is one vectorized
-        # np.where over the three id arrays.
-        pos2 = getattr(model, "pos2", None)
-        mode = model.meta.get("pos_mode")
-        if pos2 is not None and mode in ("two_pass", "voting"):
-            rev_ids = FF.pos_feature_ids(model.pos_rev, bf, model.dict_tag)
-            pred_b = model.pos_rev.decode_batch(
-                model.pos_rev.static_scores(rev_ids, n), starts, reverse=True)
-            p2_ids = {
-                "form": FF._ids_for(pos2.families["form"], bf.fn),
-                "suf3": FF._ids_for(pos2.families["suf3"], bf.suf3),
-                "shape": FF._shape_ids(pos2.families["shape"], bf),
-                "first": FF._first_ids(pos2.families["first"], seq_ids),
-            }
-            ftab = FF.class_row_tables(pos2, ("f1", "f1p", "f1n"), classes_pos)
-            p2_ids.update(FF.tag_context_ids(ftab, pred, seq_ids,
-                                             ("f1", "f1p", "f1n")))
-            btab = FF.class_row_tables(pos2, ("b1", "b1p", "b1n"), classes_pos)
-            p2_ids.update(FF.tag_context_ids(btab, pred_b, seq_ids,
-                                             ("b1", "b1p", "b1n")))
-            pred2 = pos2.decode_batch(pos2.static_scores(p2_ids, n), starts)
-            if mode == "voting":
-                pred = np.where(pred == pred_b, pred, pred2)
-            else:
-                pred = pred2
-        upos_np = np.array(classes_pos, dtype=object)[pred]
-        # bf.lower (not raw utf8_lower): carries the Python-str.lower
-        # fallback for non-ASCII tokens, keeping the lemma dict keys
-        # bit-identical to the pandas path (Unicode-table parity)
-        lemma_np = FF.lemmatize_fast(
-            bf.lower, pa.array(upos_np, pa.string()), model.lemma_rules)
-        tab = FF.class_row_tables(model.ner, ("upos", "pupos", "nupos"),
-                                  classes_pos)
-        ctx = FF.tag_context_ids(tab, pred, seq_ids, ("upos", "pupos", "nupos"))
-        ner_ids = FF.ner_feature_ids(model.ner, bf, ctx, model.gazetteer)
-        ne = np.array(model.ner.classes, dtype=object)[
-            model.ner.decode_batch(model.ner.static_scores(ner_ids, n), starts)]
-
-        ner_sep = getattr(model, "ner_sep", None)
-        if ner_sep and model.meta.get("ner_mode") == "combine":
-            from morra_spark.operators.ner_combine import combine_joint_separate
-
-            types = sorted(ner_sep)
-            M = np.zeros((n, len(types)), np.float32)
-            for j, t in enumerate(types):
-                m = ner_sep[t]
-                tab_m = FF.class_row_tables(m, ("upos", "pupos", "nupos"),
-                                            classes_pos)
-                ctx_m = FF.tag_context_ids(tab_m, pred, seq_ids,
-                                           ("upos", "pupos", "nupos"))
-                ids_m = FF.ner_feature_ids(m, bf, ctx_m, model.gazetteer)
-                st = m.static_scores(ids_m, n)
-                M[:, j] = st[:, m.classes.index(t)] - st[:, m.classes.index("O")]
-            ne = combine_joint_separate(ne, None, types, M)
-
-        feats_sep = getattr(model, "feats_sep", None)
-        if feats_sep and not triples_only:
-            from morra_spark.operators import feats as FE
-
-            fe_ids = {k: FF.feats_feature_ids(m, bf, pred, classes_pos)
-                      for k, m in feats_sep.items()}
-            feats_list = FE.predict_feats_separate(feats_sep, fe_ids, starts, n)
-        else:
-            feats_list = None
-        return upos_np, lemma_np, ne, feats_list
-
-    # ---- pandas reference path (no pyarrow) ----
-    forms = pd.Series(forms_list, dtype=object)
-    shared = FT.shared_static(forms, seq_ids)
-    pos_feats = FT.pos_static_features(forms, seq_ids, model.dict_tag,
-                                       shared=shared)
-    pos_ids = FT.features_to_ids(model.pos, pos_feats)
+    bf = FF.BatchFeatures(forms_list, seq_ids)
+    pos_ids = FF.pos_feature_ids(model.pos, bf, model.dict_tag)
     pred = model.pos.decode_batch(model.pos.static_scores(pos_ids, n), starts)
-    # A8 level-2 / level-3 (same semantics as the Arrow path above)
+    # A8 two-pass ensemble (opt-in): backward level-1 pass + level-2
+    # model consuming both passes' context (incl. future tags).
+    # pos_mode='voting' adds the level-3 ensemble on top:
+    # [PK] morra/morph_parser3.py::MorphParser3 — per-token majority
+    # vote over the variant taggers (fwd, bwd, level-2); with three
+    # voters any 2-1 agreement wins and a 1-1-1 split falls to the
+    # strongest variant (level-2), so the vote is one vectorized
+    # np.where over the three id arrays.
     pos2 = getattr(model, "pos2", None)
     mode = model.meta.get("pos_mode")
     if pos2 is not None and mode in ("two_pass", "voting"):
-        rev_ids = FT.features_to_ids(model.pos_rev, pos_feats)
+        rev_ids = FF.pos_feature_ids(model.pos_rev, bf, model.dict_tag)
         pred_b = model.pos_rev.decode_batch(
             model.pos_rev.static_scores(rev_ids, n), starts, reverse=True)
-        cls_np = np.array(classes_pos, dtype=object)
-        p2_feats = FT.pos2_static_features(
-            shared, pd.Series(cls_np[pred], dtype=object),
-            pd.Series(cls_np[pred_b], dtype=object), seq_ids)
-        p2_ids = FT.features_to_ids(pos2, p2_feats)
+        p2_ids = FF.pos2_feature_ids(pos2, bf, pred, pred_b, classes_pos)
         pred2 = pos2.decode_batch(pos2.static_scores(p2_ids, n), starts)
-        pred = np.where(pred == pred_b, pred, pred2) if mode == "voting" else pred2
-    upos = pd.Series(np.array(classes_pos, dtype=object)[pred], dtype=object)
-    lemma = lemmatize(forms.str.lower(), upos, model.lemma_rules)
-    ner_feats = FT.ner_static_features(forms, upos, seq_ids, model.gazetteer,
-                                       shared=shared)
-    ner_ids = FT.features_to_ids(model.ner, ner_feats)
-    ne = np.array(model.ner.classes, dtype=object)[
-        model.ner.decode_batch(model.ner.static_scores(ner_ids, n), starts)]
+        pred = (np.where(pred == pred_b, pred, pred2) if mode == "voting"
+                else pred2)
+    upos_np = np.array(classes_pos, dtype=object)[pred]
+    # bf.lower (not raw utf8_lower): carries the Python-str.lower
+    # fallback for non-ASCII tokens, keeping the lemma dict keys
+    # bit-identical to lemmatizer.lemmatize (Unicode-table parity)
+    lemma_np = FF.lemmatize_fast(
+        bf.lower, pa.array(upos_np, pa.string()), model.lemma_rules)
+
+    def ner_ids(m):
+        tab = FF.class_row_tables(m, _NER_CTX, classes_pos)
+        ctx = FF.tag_context_ids(tab, pred, seq_ids, _NER_CTX)
+        return FF.ner_feature_ids(m, bf, ctx, model.gazetteer)
+
+    ne = np.array(model.ner.classes, dtype=object)[model.ner.decode_batch(
+        model.ner.static_scores(ner_ids(model.ner), n), starts)]
     ner_sep = getattr(model, "ner_sep", None)
     if ner_sep and model.meta.get("ner_mode") == "combine":
-        from morra_spark.operators.ner_combine import (binary_margins,
-                                                       combine_joint_separate)
-
-        ids_per = {t: FT.features_to_ids(m, ner_feats)
-                   for t, m in ner_sep.items()}
-        types, margins = binary_margins(ner_sep, ids_per, n)
+        types, margins = binary_margins(
+            ner_sep, {t: ner_ids(m) for t, m in ner_sep.items()}, n)
         ne = combine_joint_separate(ne, None, types, margins)
+
     feats_sep = getattr(model, "feats_sep", None)
     if feats_sep and not triples_only:
         from morra_spark.operators import feats as FE
 
-        fe_static = FE.feats_static_features(shared, upos, seq_ids)
-        fe_ids = {k: FT.features_to_ids(m, fe_static)
+        fe_ids = {k: FF.feats_feature_ids(m, bf, pred, classes_pos)
                   for k, m in feats_sep.items()}
         feats_list = FE.predict_feats_separate(feats_sep, fe_ids, starts, n)
     else:
         feats_list = None
-    return (upos.to_numpy(dtype=object), lemma.to_numpy(dtype=object),
-            ne, feats_list)
+    return upos_np, lemma_np, ne, feats_list
 
 
 def annotate_turns(df: DataFrame, model_bc) -> DataFrame:
@@ -285,71 +202,5 @@ def extract_turn_triples(df: DataFrame, model_bc) -> DataFrame:
                 yield _annotate_pdf(pdf, model, triples_only=True)
 
     # 3-column input: role/tool/ts never cross into Python either.
-    # A mapInArrow variant exists (below) but measured marginally SLOWER
-    # than mapInPandas on this workload (231k vs 250k turns/s at 4x4
-    # executors) — the pandas conversion of three narrow columns is not
-    # the bottleneck; opt in via SPARK_GRAFT_ARROW_SINK=1.
-    if _HAS_ARROW and os.environ.get("SPARK_GRAFT_ARROW_SINK") == "1":
-        return df.select("conv_id", "turn_idx", "text") \
-                 .mapInArrow(_arrow_triples_fn(model_bc), schema=TRIPLES_ONLY_SCHEMA)
     return df.select("conv_id", "turn_idx", "text") \
              .mapInPandas(run, schema=TRIPLES_ONLY_SCHEMA)
-
-
-def _arrow_triples_fn(model_bc):
-    """mapInArrow body for the slim stage: conv_id/turn_idx pass through
-    as zero-copy Arrow columns; only ``text`` is materialized to Python
-    for the tokenizer; the triples column is built as a ListArray straight
-    from the cascade's flat arrays — no per-row objects at the boundary."""
-
-    def run(batches):
-        import pyarrow as pa
-
-        from morra_spark.operators.spans import assemble_batch_flat
-
-        model = model_bc.value
-        tri_type = pa.struct([("subj", pa.string()), ("pred", pa.string()),
-                              ("obj", pa.string()), ("subj_ne", pa.string()),
-                              ("obj_ne", pa.string())])
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            texts = b.column(2).to_pylist()
-            tok_lists = [tokenize_one(t if t is not None else "")
-                         for t in texts]
-            counts = np.fromiter((len(t) for t in tok_lists), np.int64,
-                                 len(tok_lists))
-            starts = np.zeros(len(counts) + 1, np.int64)
-            np.cumsum(counts, out=starts[1:])
-            n = int(starts[-1])
-            if n:
-                forms_list = [f for toks in tok_lists for (_s, _l, f) in toks]
-                seq_ids = np.repeat(np.arange(len(counts)), counts)
-                upos_np, lemma_np, ne, _ = _run_cascade(
-                    model, forms_list, seq_ids, starts, n, True)
-                tok_starts = np.fromiter(
-                    (st for toks in tok_lists for (st, _l, _f) in toks),
-                    np.int64, n)
-                tok_lens = np.fromiter(
-                    (ln for toks in tok_lists for (_s, ln, _f) in toks),
-                    np.int64, n)
-                row_ids, subj, pred, obj, s_ne, o_ne = assemble_batch_flat(
-                    texts, seq_ids, starts, tok_starts, tok_lens,
-                    lemma_np, upos_np, ne, np.array(forms_list, dtype=object))
-            else:
-                row_ids, subj, pred, obj, s_ne, o_ne = [], [], [], [], [], []
-            offsets = np.searchsorted(
-                np.asarray(row_ids, np.int64),
-                np.arange(b.num_rows + 1, dtype=np.int64)).astype(np.int32)
-            values = pa.StructArray.from_arrays(
-                [pa.array(subj, pa.string()), pa.array(pred, pa.string()),
-                 pa.array(obj, pa.string()), pa.array(s_ne, pa.string()),
-                 pa.array(o_ne, pa.string())],
-                fields=list(tri_type))
-            triples = pa.ListArray.from_arrays(pa.array(offsets,
-                                                        pa.int32()), values)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), b.column(1), triples],
-                names=["conv_id", "turn_idx", "triples"])
-
-    return run

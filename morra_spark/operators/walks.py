@@ -60,12 +60,14 @@ def random_walks(edges: DataFrame, *, walk_length: int = 10,
                  checkpoint_every: int = 8) -> DataFrame:
     """(src, dst) edges → ``(walk_id, start, path)`` walk corpus:
     ``walks_per_node`` walks of up to ``walk_length`` nodes from every
-    node, each step a uniform (seeded, portable-md5) pick among the
-    current node's neighbors. Undirected by default (edges
-    symmetrized); in ``directed`` mode a walk reaching a sink node
-    simply ends there (shorter path, never a null token). ``max_degree``
-    caps each node's neighbor list to a deterministic md5-ranked sample
-    before any walking — the standard hub-node bound for walk corpora.
+    node with an outgoing neighbor, each step a uniform (seeded,
+    portable-md5) pick among the current node's neighbors. Undirected
+    by default (edges symmetrized, so every non-null endpoint starts
+    walks); in ``directed`` mode a sink node starts no walk, and a walk
+    reaching one simply ends there (shorter path, never a null token).
+    ``max_degree`` caps each node's neighbor list to a deterministic
+    md5-ranked sample before any walking — the standard hub-node bound
+    for walk corpora.
     """
     if walk_length < 1:
         raise ValueError(f"walk_length must be >= 1, got {walk_length}")

@@ -37,6 +37,7 @@ straight into the map-only pair expansion without materializing.
 from __future__ import annotations
 
 import argparse
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,7 +65,10 @@ def run_embedding_build(pairs: DataFrame, *, out_dir: str,
         # would compare the fresh build against itself — always-green,
         # prior build gone (code-review r5). Builds are blue-green by
         # design: write each build to its OWN dir, gate, then swap.
-        norm = lambda p: p.rstrip("/")  # noqa: E731
+        # compare resolved local paths, so "file:" URIs, "..", "./" and
+        # symlinks cannot slip a prev inside out_dir past the check
+        norm = lambda p: os.path.realpath(  # noqa: E731
+            p[len("file:"):] if p.startswith("file:") else p)
         if (norm(prev_path) == norm(out_dir)
                 or norm(prev_path).startswith(norm(out_dir) + "/")):
             raise ValueError(

@@ -162,7 +162,8 @@ def main() -> None:
     ap.add_argument("--profile-k", type=int, default=3)
     ap.add_argument("--n-parts", type=int, default=16)
     ap.add_argument("--structure", action="store_true",
-                    help="also write the kcore2/ and clustering/ audits")
+                    help="also write the kcore2/, clustering/, hits/ and "
+                         "truss3/ audits")
     args = ap.parse_args()
     spark = get_spark("kg_report")
     s = run_kg_report(spark, triples_path=args.triples, out_dir=args.out,

@@ -12,6 +12,30 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cores() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def host_driver_mem() -> str:
+    """``$SPARK_DRIVER_MEM``, else ~40% of physical RAM (or of the cgroup
+    ``memory.max`` when lower), capped at 48g: a local-mode JVM heap sized
+    past the box gets the whole test run OOM-killed."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+        if limit.isdigit():
+            ram = min(ram, int(limit))
+    except OSError:
+        pass
+    return f"{max(1, min(48, int(ram * 0.4) // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "morra_spark",
     master: str | None = None,
@@ -20,12 +44,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the local core count — NOT Spark's
-    200 default, which over-parallelizes small local runs; on a real
-    cluster this is overridden to ~2-3x total executor cores.
+    ``master`` defaults to ``local[host_cores()]`` and the driver heap to
+    ``host_driver_mem()``. ``shuffle_partitions`` defaults to the local
+    core count — NOT Spark's 200 default, which over-parallelizes small
+    local runs; on a real cluster this is overridden to ~2-3x total
+    executor cores.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cores()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -46,7 +71,7 @@ def get_spark(
         # task serializes them. Swept 8k/16k/50k on the flagship at 16
         # cores: 16k wins (257k turns/s vs 216k at 50k, 186k at 8k).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", host_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

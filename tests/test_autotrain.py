@@ -61,11 +61,13 @@ def test_autotrain_spark_sweep_matches_sequential(spark, gold):
     assert strip(r1) == strip(r2)
 
 
-def test_voting_mode_accuracy_and_path_parity(spark, fixture_dir, model,
-                                              monkeypatch):
-    """A8 level-3: voting ≥ 0.98 POS accuracy on fixtures, and the Arrow
-    and pandas cascade paths agree token-for-token under voting."""
-    import morra_spark.operators.tagger as TG
+def test_voting_mode_accuracy_and_path_parity(spark, fixture_dir, model):
+    """A8 level-3: voting ≥ 0.98 POS accuracy on fixtures, and the
+    cascade's level-2 feature ids (features_fast.pos2_feature_ids)
+    equal the features.py reference ids token-for-token."""
+    from morra_spark.autotrain import _sequence_layout
+    from morra_spark.operators import features as FT
+    from morra_spark.operators import features_fast as FF
 
     gold = spark.read.parquet(f"{fixture_dir}/gold_tokens").toPandas()
     model.meta["ner_mode"] = None
@@ -73,22 +75,31 @@ def test_voting_mode_accuracy_and_path_parity(spark, fixture_dir, model,
     try:
         m = eval_token_accuracy(model, gold)
         assert m["pos"] >= 0.98, m
-        # path parity (the pandas fallback implements A8 identically):
-        # token-for-token equality of upos/lemma/ne on a sub-corpus
-        from morra_spark.autotrain import _sequence_layout
-
-        sub = gold[gold["conv_id"].isin(sorted(set(gold["conv_id"]))[:10])]
-        g2, seq_ids, starts = _sequence_layout(sub)
-        forms = g2["form"].astype(str).tolist()
-        arrow = TG._run_cascade(model, forms, seq_ids, starts, len(g2), True)
-        monkeypatch.setattr(TG, "_HAS_ARROW", False)
-        pandas_path = TG._run_cascade(model, forms, seq_ids, starts,
-                                      len(g2), True)
-        for a, p in zip(arrow[:3], pandas_path[:3]):
-            assert (np.asarray(a) == np.asarray(p)).all()
     finally:
         model.meta.pop("pos_mode", None)
         model.meta.pop("ner_mode", None)
+
+    sub = gold[gold["conv_id"].isin(sorted(set(gold["conv_id"]))[:10])]
+    g2, seq_ids, starts = _sequence_layout(sub)
+    forms_list = g2["form"].astype(str).tolist()
+    n = len(g2)
+    bf = FF.BatchFeatures(forms_list, seq_ids)
+    pred_f = model.pos.decode_batch(model.pos.static_scores(
+        FF.pos_feature_ids(model.pos, bf, model.dict_tag), n), starts)
+    pred_b = model.pos_rev.decode_batch(model.pos_rev.static_scores(
+        FF.pos_feature_ids(model.pos_rev, bf, model.dict_tag), n), starts,
+        reverse=True)
+    classes = np.array(model.pos.classes, dtype=object)
+    forms = pd.Series(forms_list, dtype=object)
+    ref = FT.features_to_ids(model.pos2, FT.pos2_static_features(
+        FT.shared_static(forms, seq_ids),
+        pd.Series(classes[pred_f], dtype=object),
+        pd.Series(classes[pred_b], dtype=object), seq_ids))
+    fast = FF.pos2_feature_ids(model.pos2, bf, pred_f, pred_b,
+                               model.pos.classes)
+    assert set(ref) == set(fast)
+    for name in ref:
+        assert (ref[name] == fast[name]).all(), name
 
 
 def test_voting_majority_semantics():

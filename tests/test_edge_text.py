@@ -59,18 +59,24 @@ def test_long_token_and_unicode_tokenized(edge_out):
 
 def test_edge_texts_through_spark_stage(spark, model):
     """Same payloads through the real mapInPandas stage (Arrow transfer
-    of empty arrays, nulls, huge strings)."""
+    of empty arrays, nulls, huge strings), plus a NULL text row: it
+    crosses the boundary as None and must annotate to zero tokens and
+    zero triples on both stages, not a stringified 'None' token."""
     from pyspark.sql import functions as F
 
     from morra_spark.operators.tagger import annotate_turns, extract_turn_triples
 
     rows = [(f"e{i}", 0, "user", t, None) for i, t in enumerate(EDGE_TEXTS)]
+    rows.append(("null", 0, "user", None, None))
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string"
     ).withColumn("ts", F.to_timestamp(F.lit("2026-01-01")))
     bc = spark.sparkContext.broadcast(model)
-    ann = annotate_turns(df, bc)
-    assert ann.count() == len(EDGE_TEXTS)
+    ann = {r.conv_id: r for r in annotate_turns(df, bc).collect()}
+    assert len(ann) == len(rows)
+    assert ann["null"].text is None
+    assert ann["null"].tokens == [] and ann["null"].triples == []
     slim = extract_turn_triples(df, bc)
     got = {r.conv_id: r.triples for r in slim.collect()}
     assert len(got["e5"]) == 1 and got["e0"] == []
+    assert got["null"] == []

@@ -802,6 +802,20 @@ def test_infer_types_fractional_weights_vote_exactly(spark):
     assert abs(conf - 0.9 / 1.4) < 1e-9
 
 
+def test_infer_types_rejects_missing_weight_col(spark):
+    """A misspelled ``weight_col`` raises instead of silently running
+    the unweighted vote; ``weight_col=None`` is the explicit opt-out."""
+    from morra_spark.operators.kg_graph import infer_node_types
+
+    n, e = _lp_frames(spark, [("a", "PER"), ("x", None)], [("x", "a", 3)])
+    with pytest.raises(ValueError, match="weigth"):
+        infer_node_types(n, e, weight_col="weigth")
+    got = {r.entity: r.ne_type
+           for r in infer_node_types(n, e.drop("weight"), iters=1,
+                                     weight_col=None).collect()}
+    assert got["x"] == "PER"
+
+
 def test_negative_samples_subject_corruption_mode(spark):
     """corrupt='subj' mirrors the protocol: negatives are (s', p, o)
     with s' from the SUBJECT vocabulary, no collision with positives,

@@ -141,33 +141,52 @@ def test_lemmatize_fast_matches_pandas_reference(model, forms):
 
 @settings(max_examples=60, deadline=None)
 @given(st.lists(TEXTS, min_size=1, max_size=6))
-def test_cascade_paths_agree_on_arbitrary_text(model, texts):
-    """Arrow-kernel and pandas-reference cascades emit identical
-    (upos, lemma, ne) on ARBITRARY unicode — the r1 advice found the two
-    paths diverging on non-ASCII; this pins the fix against generated
-    inputs, not just the curated edge-text corpus."""
-    import morra_spark.operators.tagger as TG
-    from morra_spark.operators.tokenizer import tokenize_one
+def test_feature_ids_match_reference_on_arbitrary_text(model, texts):
+    """Arrow-kernel POS and NER feature ids == the features.py reference
+    ids on ARBITRARY unicode — the r1 advice found the two paths
+    diverging on non-ASCII (RE2/utf8proc vs CPython Unicode tables);
+    this pins the fix against generated inputs, not just the curated
+    edge-text corpus of test_features_fast. Lemma parity on generated
+    forms is test_lemmatize_fast_matches_pandas_reference."""
+    import pandas as pd
+
+    from morra_spark.operators import features as FT
+    from morra_spark.operators import features_fast as FF
 
     tok_lists = [tokenize_one(t) for t in texts]
-    forms = [f for toks in tok_lists for (_s, _l, f) in toks]
-    if not forms:
+    forms_list = [f for toks in tok_lists for (_s, _l, f) in toks]
+    if not forms_list:
         return
     counts = [len(t) for t in tok_lists]
     starts = np.concatenate([[0], np.cumsum(counts)])
     seq_ids = np.repeat(np.arange(len(counts)), counts)
-    n = len(forms)
+    n = len(forms_list)
+    forms = pd.Series(forms_list, dtype=object)
+    shared = FT.shared_static(forms, seq_ids)
+    bf = FF.BatchFeatures(forms_list, seq_ids)
 
-    assert TG._HAS_ARROW  # pyarrow is baked into this environment
-    arrow = TG._run_cascade(model, forms, seq_ids, starts, n, True)
-    TG._HAS_ARROW = False
-    try:
-        ref = TG._run_cascade(model, forms, seq_ids, starts, n, True)
-    finally:
-        TG._HAS_ARROW = True
-    for a, p, what in zip(arrow[:3], ref[:3], ("upos", "lemma", "ne")):
-        mism = np.asarray(a) != np.asarray(p)
-        assert not mism.any(), (what, [forms[i] for i in np.nonzero(mism)[0]])
+    def assert_same(ref, fast):
+        assert set(ref) == set(fast)
+        for name in ref:
+            mism = ref[name] != fast[name]
+            assert not mism.any(), (name, [forms_list[i]
+                                           for i in np.nonzero(mism)[0]])
+
+    pos_ref = FT.features_to_ids(
+        model.pos, FT.pos_static_features(forms, seq_ids, model.dict_tag,
+                                          shared=shared))
+    assert_same(pos_ref, FF.pos_feature_ids(model.pos, bf, model.dict_tag))
+
+    pred = model.pos.decode_batch(model.pos.static_scores(pos_ref, n), starts)
+    upos = pd.Series(np.array(model.pos.classes, dtype=object)[pred])
+    ner_ref = FT.features_to_ids(
+        model.ner, FT.ner_static_features(forms, upos, seq_ids,
+                                          model.gazetteer, shared=shared))
+    ctx_names = ("upos", "pupos", "nupos")
+    tab = FF.class_row_tables(model.ner, ctx_names, model.pos.classes)
+    ctx = FF.tag_context_ids(tab, pred, seq_ids, ctx_names)
+    assert_same(ner_ref, FF.ner_feature_ids(model.ner, bf, ctx,
+                                            model.gazetteer))
 
 
 # ---- Spark-backed randomized reference parity (module-scoped session

@@ -1197,8 +1197,8 @@ def test_compaction_skips_uncommitted_delta_dirs(spark, tmp_path):
 def test_null_text_turn_emits_no_tokens_or_triples(model):
     """A NULL text turn must annotate to zero tokens/triples — not the
     stringified 'None' pseudo-token the old astype(str) minted
-    (code-review r5; also keeps the pandas and Arrow sinks
-    bit-identical on null input)."""
+    (code-review r5). The same row through the real Spark stage is
+    test_edge_text::test_edge_texts_through_spark_stage."""
     import pandas as pd
 
     from morra_spark.operators.tagger import _annotate_pdf

@@ -332,3 +332,23 @@ def test_embedding_build_refuses_in_place_drift(spark, tmp_path):
     for bad in (f"{out}/embeddings", out, f"{out}/"):
         with pytest.raises(ValueError, match="inside out_dir"):
             run_embedding_build(df, out_dir=out, prev_path=bad)
+
+
+def test_embedding_build_refuses_in_place_drift_via_unnormalized_path(
+        spark, tmp_path):
+    """The --prev-inside---out guard resolves both paths first: a
+    ``file:`` URI, a ``..`` detour or a symlink to the same directory
+    must be refused like the plain path."""
+    import os
+
+    from morra_spark.plans.embeddings import run_embedding_build
+
+    df = spark.createDataFrame([("a", "b")], ["src", "dst"])
+    out = str(tmp_path / "emb")
+    os.makedirs(out)
+    link = str(tmp_path / "emb_link")
+    os.symlink(out, link)
+    for bad in (f"file:{out}/embeddings", f"file://{out}",
+                f"{tmp_path}/x/../emb/embeddings", f"{link}/embeddings"):
+        with pytest.raises(ValueError, match="inside out_dir"):
+            run_embedding_build(df, out_dir=out, prev_path=bad)
