@@ -58,19 +58,17 @@ def entry(spark: SparkSession) -> DataFrame:
     +spans+triples, map-only) → broadcast entity linking → canonical
     (subj, pred, obj) counts, top-k. Driver checks rows > 0."""
     from morra_spark.model_artifact import KGModel
-    from morra_spark.plans.pipeline import (entity_candidates_df,
-                                            extract_triples_with_tools)
-    from morra_spark.operators.tagger import extract_turn_triples
-    from morra_spark.plans import checkpoint as CK
+    from morra_spark.plans.pipeline import (align_tool_turns,
+                                            content_triples,
+                                            entity_candidates_df)
 
     model = KGModel.load(MODEL_PATH)
     model_bc = spark.sparkContext.broadcast(model)
     docs = _docs_as_transcripts(_t(spark, "/root/testdata/sf0.001", "documents"))
     src = docs.unionByName(_synthetic_transcripts(spark))
-    content = src.filter(F.col("role") != "tool")
-    ann = CK.add_part_key(extract_turn_triples(content, model_bc), 64)
-    triples = extract_triples_with_tools(
-        ann, entity_candidates_df(spark, model), src, 64)
+    content = content_triples(src, model_bc, entity_candidates_df(spark, model),
+                              64)
+    triples = align_tool_turns(content, src, 64)
     return (triples.groupBy("subj", "pred", "obj")
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy(F.desc("n"), "subj", "pred", "obj")
@@ -150,7 +148,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_tool_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KG tool-turn alignment shape (B-W1 window form of B-J4; the
-    same operator `pipeline.tool_triples_from_extracted` uses): each
+    same ordering window `pipeline.align_tool_turns` uses): each
     'tool-result' event (type = purchase) is attributed to the latest
     PRECEDING non-purchase event of the same user — ordering window,
     filtered to the tool-like rows."""
@@ -1979,39 +1977,24 @@ def q_kg_annotate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_flagship_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full KG pipeline on deterministic synthetic transcripts → top
     canonical triples."""
-    from morra_spark.model_artifact import KGModel
-    from morra_spark.operators.tagger import extract_turn_triples
-    from morra_spark.plans import checkpoint as CK
-    from morra_spark.plans.pipeline import (entity_candidates_df,
-                                            extract_triples_with_tools)
-
-    model = KGModel.load(MODEL_PATH)
-    src = _synthetic_transcripts(spark, 120)
-    content = src.filter(F.col("role") != "tool")
-    ann = CK.add_part_key(
-        extract_turn_triples(content, spark.sparkContext.broadcast(model)), 64)
-    t = extract_triples_with_tools(ann, entity_candidates_df(spark, model),
-                                   src, 64)
-    return (t.groupBy("subj", "pred", "obj").agg(F.count(F.lit(1)).alias("n"))
+    return (_flagship_triples(spark)
+            .groupBy("subj", "pred", "obj").agg(F.count(F.lit(1)).alias("n"))
             .orderBy(F.desc("n"), "subj", "pred", "obj").limit(50))
 
 
 def _flagship_triples(spark: SparkSession) -> DataFrame:
-    """Shared input for the graph-materialize queries: the full pipeline
-    triple set on the deterministic synthetic transcripts."""
+    """Shared input for the flagship and graph-materialize queries: the
+    full pipeline triple set on the deterministic synthetic transcripts."""
     from morra_spark.model_artifact import KGModel
-    from morra_spark.operators.tagger import extract_turn_triples
-    from morra_spark.plans import checkpoint as CK
-    from morra_spark.plans.pipeline import (entity_candidates_df,
-                                            extract_triples_with_tools)
+    from morra_spark.plans.pipeline import (align_tool_turns,
+                                            content_triples,
+                                            entity_candidates_df)
 
     model = KGModel.load(MODEL_PATH)
     src = _synthetic_transcripts(spark, 120)
-    content = src.filter(F.col("role") != "tool")
-    ann = CK.add_part_key(
-        extract_turn_triples(content, spark.sparkContext.broadcast(model)), 64)
-    return extract_triples_with_tools(
-        ann, entity_candidates_df(spark, model), src, 64)
+    content = content_triples(src, spark.sparkContext.broadcast(model),
+                              entity_candidates_df(spark, model), 64)
+    return align_tool_turns(content, src, 64).drop("is_tool")
 
 
 def q_kg_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

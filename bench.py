@@ -169,12 +169,10 @@ def timed_clean(spark, fn, label: str, max_retries: int = 2):
 
 def run_flagship(spark, transcripts_path: str) -> tuple[float, int, bool]:
     """Timed: scan → fused Arrow annotate → link → canonical triple agg."""
-    from pyspark.sql import functions as F
     from morra_spark.model_artifact import KGModel
-    from morra_spark.operators.tagger import extract_turn_triples
-    from morra_spark.plans import checkpoint as CK
-    from morra_spark.plans.pipeline import (entity_candidates_df,
-                                            extract_triples_with_tools,
+    from morra_spark.plans.pipeline import (align_tool_turns,
+                                            content_triples,
+                                            entity_candidates_df,
                                             load_transcripts)
 
     model = KGModel.load(MODEL_PATH)
@@ -182,15 +180,9 @@ def run_flagship(spark, transcripts_path: str) -> tuple[float, int, bool]:
     src = load_transcripts(spark, transcripts_path)
 
     def one_run() -> int:
-        content = src.filter(F.col("role") != "tool")
-        ann = CK.add_part_key(extract_turn_triples(content, bc), 64)
-        triples = extract_triples_with_tools(
-            ann, entity_candidates_df(spark, model), src, 64)
-        n = triples.count()
-        # the annotate cache backing the two-branch union is per-run
-        # state: drop it so repeated timed runs measure from cold
-        spark.catalog.clearCache()
-        return n
+        content = content_triples(src, bc, entity_candidates_df(spark, model),
+                                  64)
+        return align_tool_turns(content, src, 64).count()
 
     sec, n, clean = timed_clean(spark, one_run, "kg_flagship")
     return sec, n, clean
@@ -351,8 +343,13 @@ def bench_once(cpus: int, sf_dir: str, n_convs: int, micro: bool = True,
         spark.stop()
 
 
+# --scaling layouts: local-cluster[n, EXEC_CORES, EXEC_MEM_MB], n up to 8
+EXEC_CORES, EXEC_MEM_MB, MAX_EXECS = 2, 8192, 8
+
+
 def bench_once_pinned(n_executors: int, sf_dir: str, n_convs: int,
-                      exec_cores: int = 2, driver_slack: int = 4) -> dict:
+                      exec_cores: int = EXEC_CORES,
+                      driver_slack: int = 4) -> dict:
     """Run bench_once in a subprocess as a REAL multi-executor layout:
     ``local-cluster[n_executors, exec_cores, mem]`` launches one separate
     executor JVM per executor (own heap, own GC, own Python workers) —
@@ -366,7 +363,8 @@ def bench_once_pinned(n_executors: int, sf_dir: str, n_convs: int,
     total = n_executors * exec_cores
     cmd = [sys.executable, os.path.abspath(__file__), "--once", str(total),
            "--convs", str(n_convs),
-           "--master", f"local-cluster[{n_executors},{exec_cores},8192]"]
+           "--master",
+           f"local-cluster[{n_executors},{exec_cores},{EXEC_MEM_MB}]"]
     if shutil.which("taskset"):
         # pin to the TOP of the core range: cores 0-3 host the system
         # daemons on this box, and including them skews the smaller run
@@ -383,7 +381,7 @@ def bench_once_pinned(n_executors: int, sf_dir: str, n_convs: int,
 
 
 def main() -> None:
-    from morra_spark.session import host_cores
+    from morra_spark.session import host_cores, host_mem_bytes
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true",
@@ -410,6 +408,16 @@ def main() -> None:
         return
 
     if args.scaling:
+        need_cores = MAX_EXECS * EXEC_CORES
+        need_gib = MAX_EXECS * EXEC_MEM_MB / 1024
+        have_gib = host_mem_bytes() / 2**30
+        if cpus < need_cores or have_gib < need_gib:
+            print(f"bench --scaling runs up to local-cluster[{MAX_EXECS},"
+                  f"{EXEC_CORES},{EXEC_MEM_MB}]: it needs {need_cores} "
+                  f"cores and {need_gib:.0f} GiB; this host gives {cpus} "
+                  f"cores and {have_gib:.1f} GiB (RAM or cgroup limit)",
+                  file=sys.stderr)
+            sys.exit(2)
         # scaling needs a steady-state-sized input (~5.9M turns): a
         # 100 TB cluster job amortizes startup over hours, so the
         # ~3s/run fixed driver+stage latency must be noise against the
@@ -445,8 +453,8 @@ def main() -> None:
         effs = [p["eff"] for p in pairs]
         med = statistics.median(effs)
         # supplementary bandwidth-saturated pair: 2 → 8 executors
-        s_lo = bench_once_pinned(2, sf_dir, scaling_convs)
-        s_hi = bench_once_pinned(8, sf_dir, scaling_convs)
+        s_lo = bench_once_pinned(MAX_EXECS // 4, sf_dir, scaling_convs)
+        s_hi = bench_once_pinned(MAX_EXECS, sf_dir, scaling_convs)
         s_eff = (s_hi["turns_per_sec"] / s_lo["turns_per_sec"]) / 4.0
         out = {"metric": "scaling_efficiency", "value": round(med, 3),
                "unit": "ratio", "sf": sf, "effs": effs,

@@ -9,7 +9,7 @@ nearest-antecedent heuristic: resolve each anaphoric mention to the
 most recent preceding NON-anaphoric entity mention in the same
 conversation (the rule behind "last mentioned entity wins" in rule-based
 coref baselines, and the same alignment contract this pipeline already
-applies to tool turns — ``plans/pipeline.extract_triples_with_tools``).
+applies to tool turns — ``plans/pipeline.align_tool_turns``).
 
 Two entry points:
 

@@ -134,12 +134,20 @@ def run_ann_benchmark(emb: DataFrame, *, n_queries: int = 32, k: int = 10,
         t1 = time.time()
         # ask for k+1 then drop the self-match and re-rank: the operator
         # legitimately returns the query itself at cosine 1 when queries
-        # are corpus members. The timer covers retrieval only (probe +
-        # re-rank, materialized here); the scoring joins below run
-        # OUTSIDE it so sec compares the same work brute_sec measures
-        got = (ann_ivf_topk(assigned, qs, C, k=k + 1, nprobe=int(nprobe),
-                            vec_col=vec_col)
-               .filter(F.col("vec_id") != F.col("qid"))
+        # are corpus members. The re-rank recomputes full-precision
+        # cosine — the operator's output is rounded to 4 decimals, and
+        # truth ranks unrounded, so near-ties at the k boundary would
+        # otherwise fall to vec_id. The timer covers retrieval only
+        # (probe + re-rank, materialized here); the scoring joins below
+        # run OUTSIDE it so sec compares the same work brute_sec measures
+        cand = (ann_ivf_topk(assigned, qs, C, k=k + 1, nprobe=int(nprobe),
+                             vec_col=vec_col)
+                .filter(F.col("vec_id") != F.col("qid"))
+                .select("qid", "vec_id"))
+        got = (assigned.select("vec_id", vec_col)
+               .join(F.broadcast(cand), "vec_id")
+               .join(F.broadcast(qs), "qid")
+               .withColumn("cosine", _cosine(vec_col, "q"))
                .withColumn("_r", F.row_number().over(w))
                .filter(F.col("_r") <= k)
                .select("qid", "vec_id")

@@ -121,8 +121,11 @@ def run_incremental(spark: SparkSession, *, old_transcripts_path: str,
             if pk not in done:
                 p = jvm.org.apache.hadoop.fs.Path(
                     f"{src_dir}/part_key={pk}")
-                if fs.exists(p):
-                    fs.delete(p, True)
+                # Hadoop reports most delete failures as `false`: a
+                # stale partition left here breaks incremental ≡ full
+                if fs.exists(p) and not fs.delete(p, True):
+                    raise IOError(f"run_incremental: could not delete "
+                                  f"stale partition {p}")
 
     res = run_pipeline(spark, transcripts_path=new_transcripts_path,
                        out_dir=out_dir, model_path=model_path,

@@ -7,6 +7,13 @@ the checkpoint sink. Exactly one shuffle on the triple path (the final
 repartition-by-part_key) + broadcast joins; turn reassembly (its own
 salted two-phase aggregation) is a separate branch.
 
+One plan, one tool-alignment rule: ``content_triples`` is the map-only
+content half and ``align_tool_turns`` the single ordering window that
+attributes tool turns to their invoking turn. One-pass callers (entry(),
+bench, streaming, backfill) compose the two directly;
+``run_pipeline`` runs them as two resumable stages, aligning against
+the materialized stage-1 parquet.
+
 Entity linking (north star: "entity linking by lemma-normalized
 candidate scoring"): mention/endpoint lemma_norm → broadcast join against
 the candidate dictionary → highest-frequency candidate wins via a
@@ -133,107 +140,62 @@ def link_endpoints(triples: DataFrame, candidates: DataFrame) -> DataFrame:
 TOOL_PRED = "used_tool"
 
 
-def tool_triples_from_extracted(extracted: DataFrame, turns: DataFrame,
-                                n_parts: int = 64) -> DataFrame:
-    """Tool-turn alignment → (subj, 'used_tool', tool_name) triples.
+def content_triples(turns: DataFrame, model_bc, candidates: DataFrame,
+                    n_parts: int) -> DataFrame:
+    """Transcript turns → linked, canonicalized content triple rows
+    (conv_id, turn_idx, part_key, subj, pred, obj, subj_ne, obj_ne).
 
-    Each ``role='tool'`` turn is attributed to its INVOKING turn — the
-    nearest preceding non-tool turn of the same conversation — and emits
-    one triple at the tool turn's (conv_id, turn_idx). The subject is
-    the lexicographically smallest canonical subj among the invoking
-    turn's extracted triples (order-independent, so stable under any
-    intra-turn extraction order and equal to the fixtures' gold rule);
-    tool turns whose invoking turn yielded no triples emit nothing.
-
-    ``extracted`` MUST be materialized or cached content triples (the
-    stage-1 parquet output in the production pipeline, a persisted
-    DataFrame in count-only paths): consuming the live annotation
-    DataFrame here would duplicate the whole perceptron cascade in the
-    physical plan — r2's first wiring did exactly that (2× MapInPandas,
-    scaling collapsed to 0.26) — and Catalyst would even broadcast the
-    Python-stage output. Subjects are already canonical (post-link), so
-    no second linking pass is needed.
-
-    Spark-first shape: a range join of tool turns against content turns
-    would work (B-J4 — the oracled ``range_join``/``tool_alignment``
-    queries prove that plan), but same-table alignment is cheaper as ONE
-    ordering window over (conv_id, turn_idx) on narrow projections
-    (SURVEY §2 B-W1): per-turn min-subj is a slim groupBy over the
-    already-materialized triple columns, and window state is one struct
-    per row, so hot conversations cannot OOM it.
-    """
-    first = (extracted.filter(F.col("pred") != TOOL_PRED)
-             .groupBy("conv_id", "turn_idx")
-             .agg(F.min(F.struct(F.col("subj").alias("inv_subj"),
-                                 F.col("subj_ne").alias("inv_subj_ne")))
-                  .alias("m"))
-             .select("conv_id", "turn_idx", "m.inv_subj", "m.inv_subj_ne"))
-    seq = (turns.select("conv_id", "turn_idx", "role", "tool")
-           .join(first, ["conv_id", "turn_idx"], "left"))
-    w = (Window.partitionBy("conv_id").orderBy("turn_idx")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    inv = F.last(F.when(F.col("role") != "tool",
-                        F.struct("inv_subj", "inv_subj_ne")),
-                 ignorenulls=True).over(w)
-    tool_rows = (seq.withColumn("inv", inv)
-                 .filter((F.col("role") == "tool")
-                         & F.col("tool").isNotNull()
-                         & F.col("inv.inv_subj").isNotNull())
-                 .select("conv_id", "turn_idx",
-                         F.col("inv.inv_subj").alias("subj"),
-                         F.lit(TOOL_PRED).alias("pred"),
-                         F.col("tool").alias("obj"),
-                         F.col("inv.inv_subj_ne").alias("subj_ne"),
-                         F.lit("Tool").alias("obj_ne")))
-    return CK.add_part_key(tool_rows, n_parts)
-
-
-def extract_triples(ann: DataFrame, candidates: DataFrame) -> DataFrame:
-    """turns_annotated → linked, canonicalized content triple rows
-    (map-only + broadcast joins; tool-turn triples are a separate
-    downstream stage — ``tool_triples_from_extracted``)."""
-    t = ann
-    if "role" in t.columns:
-        t = t.filter(F.col("role") != "tool")
-    t = (t.select("conv_id", "turn_idx", "part_key",
-                  F.explode("triples").alias("t"))
+    The flagship plan's map-only half: the role filter runs JVM-side
+    BEFORE the Python stage, the slim triples-only kernel keeps
+    token/mention arrays out of the Arrow transfer, then explode and the
+    two broadcast dictionary joins of ``link_endpoints``. Tool turns
+    contribute nothing here; ``align_tool_turns`` attributes them."""
+    content = turns.filter(F.col("role") != "tool")
+    ann = CK.add_part_key(extract_turn_triples(content, model_bc), n_parts)
+    t = (ann.select("conv_id", "turn_idx", "part_key",
+                    F.explode("triples").alias("t"))
          .select("conv_id", "turn_idx", "part_key",
                  "t.subj", "t.pred", "t.obj", "t.subj_ne", "t.obj_ne"))
     return link_endpoints(t, candidates)
 
 
-def extract_triples_with_tools(ann: DataFrame, candidates: DataFrame,
-                               turns: DataFrame,
-                               n_parts: int = 64) -> DataFrame:
-    """Content triples ∪ tool-alignment triples in ONE pass — for paths
-    that never materialize stage 1 (entry(), bench, flagship query).
+def align_tool_turns(content: DataFrame, turns: DataFrame,
+                     n_parts: int) -> DataFrame:
+    """Content triples ∪ tool-alignment triples, with a boolean
+    ``is_tool`` column marking the rows that came from a tool turn.
 
-    The exploded content stream is unioned with one skeleton row per raw
-    turn (subj null) and a single ordering window over conv_id fills the
-    tool subjects: rows sort (turn_idx ASC, subj DESC NULLS FIRST,
-    subj_ne DESC NULLS FIRST), so the LAST content-turn row strictly
-    before a tool row is the lexicographically-smallest (subj, subj_ne)
-    of the nearest preceding content turn — or that turn's null blocker
-    skeleton when it emitted no triples (then the tool turn emits
-    nothing). Same rule as ``tool_triples_from_extracted`` and the
-    fixtures' gold, without any per-turn aggregation.
+    Each ``role='tool'`` turn is attributed to its INVOKING turn — the
+    nearest preceding non-tool turn of the same conversation — and emits
+    one (subj, 'used_tool', tool_name) row at the tool turn's (conv_id,
+    turn_idx). The subject is the lexicographically smallest (subj,
+    subj_ne) among ALL the invoking turn's content triples (the
+    fixtures' gold rule); a tool turn whose invoking turn yielded no
+    triples, or whose tool name is null, emits nothing.
 
-    Plan cost: the annotation cascade appears exactly ONCE (the union's
-    two branches are the Python stage and a raw-input projection — r2's
-    first wiring consumed the live annotation twice, doubling the
-    perceptron work and collapsing scaling to 0.26), plus one shuffle of
-    the narrow exploded stream for the window. The production pipeline
-    avoids even that shuffle by aligning against the materialized
-    stage-1 parquet (run_pipeline's stage 2).
+    ``content`` is either live (``content_triples``: entry(), bench,
+    streaming, backfill) or the materialized stage-1 parquet
+    (``run_pipeline`` stage 2). The content stream is unioned with one
+    skeleton row per raw turn (subj null) and a single ordering window
+    over conv_id fills the tool subjects: rows sort (turn_idx ASC, subj
+    DESC NULLS FIRST, subj_ne DESC NULLS FIRST), so the LAST content-turn
+    row strictly before a tool row is the smallest (subj, subj_ne) of
+    the nearest preceding content turn — or that turn's null blocker
+    skeleton when it emitted no triples.
+
+    Plan cost: the union's branches are ``content`` and a projection of
+    the raw turns, so a live annotation appears exactly ONCE (r2's first
+    wiring consumed it twice, doubling the perceptron work and
+    collapsing scaling to 0.26), plus one shuffle of the narrow rows for
+    the window. Window state is one struct per row, so hot
+    conversations cannot OOM it. Select tool rows by ``is_tool``, never
+    by ``pred == 'used_tool'``: a content triple may carry that lemma.
     """
-    content = extract_triples(ann, candidates) \
-        .withColumn("is_tool", F.lit(False))
     # one skeleton row per RAW turn: tool turns are the rows to align;
     # content turns act as BLOCKERS — a triple-less invoking turn must
-    # yield "no subject" (matching gold + tool_triples_from_extracted),
-    # not fall through to an older turn's triples. Blockers sort BEFORE
-    # their turn's real triple rows (nulls-first on the desc keys), so
-    # `last` only lands on one when the turn emitted nothing.
+    # yield "no subject", not fall through to an older turn's triples.
+    # Blockers sort BEFORE their turn's real triple rows (nulls-first on
+    # the desc keys), so `last` only lands on one when the turn emitted
+    # nothing.
     skeletons = (turns.select(
         "conv_id", "turn_idx",
         F.lit(None).cast("string").alias("subj"),
@@ -243,6 +205,7 @@ def extract_triples_with_tools(ann: DataFrame, candidates: DataFrame,
         F.lit("Tool").alias("obj_ne"),
         (F.col("role") == "tool").alias("is_tool")))
     skeletons = CK.add_part_key(skeletons, n_parts)
+    content = content.withColumn("is_tool", F.lit(False))
     u = content.unionByName(skeletons.select(*content.columns))
     w = (Window.partitionBy("conv_id")
          .orderBy("turn_idx", F.col("subj").desc_nulls_first(),
@@ -257,7 +220,7 @@ def extract_triples_with_tools(ann: DataFrame, candidates: DataFrame,
                                           F.col("inv.subj_ne"))
                         .otherwise(F.col("subj_ne")))
             .filter(F.col("subj").isNotNull() & F.col("obj").isNotNull())
-            .drop("inv", "is_tool"))
+            .drop("inv"))
 
 
 def read_pruned_parts(spark: SparkSession, path: str,
@@ -329,13 +292,7 @@ def run_pipeline(spark: SparkSession, *, transcripts_path: str, out_dir: str,
         src = src.filter(F.col("part_key").isin(only_part_keys))
 
     def transform(pending: DataFrame, _pending_keys: list[int]) -> DataFrame:
-        # role filter runs JVM-side BEFORE the Python stage; the slim
-        # triples-only schema keeps token/mention arrays out of the
-        # Arrow transfer entirely (they are recomputable, not needed by
-        # the triple sink).
-        content = pending.drop("part_key").filter(F.col("role") != "tool")
-        ann = CK.add_part_key(extract_turn_triples(content, model_bc), n_parts)
-        out = extract_triples(ann, candidates)
+        out = content_triples(pending, model_bc, candidates, n_parts)
         if resolve_pronouns:
             from morra_spark.operators.coref import resolve_triple_anaphora
 
@@ -355,19 +312,19 @@ def run_pipeline(spark: SparkSession, *, transcripts_path: str, out_dir: str,
                         pending_keys: list[int]) -> DataFrame:
         # Stage 2 aligns tool turns against the MATERIALIZED stage-1
         # output (cheap narrow parquet scan) instead of the live
-        # annotation DataFrame — re-deriving it here would re-run the
-        # whole perceptron cascade a second time inside this plan.
-        # part_key is a pure function of conv_id, so each pending
-        # partition's conversations are fully self-contained. The
-        # read-back prunes STATICALLY via the driver-side pending_keys
-        # literal (guaranteed PartitionFilters on the scan, asserted in
+        # annotation — re-deriving it here would re-run the whole
+        # perceptron cascade a second time inside this plan. part_key is
+        # a pure function of conv_id, so each pending partition's
+        # conversations are fully self-contained. The read-back prunes
+        # STATICALLY via the driver-side pending_keys literal
+        # (guaranteed PartitionFilters on the scan, asserted in
         # test_plan_shape) — a left-semi join against pending would rely
         # on dynamic partition pruning firing for a file source and, if
         # it didn't, resume would rescan all of stage 1 at 100 TB.
-        extracted = read_pruned_parts(spark, content_dir, pending_keys)
-        return tool_triples_from_extracted(
-            extracted, pending.drop("part_key"), n_parts) \
-            .repartition("part_key")
+        content = read_pruned_parts(spark, content_dir, pending_keys)
+        return (align_tool_turns(content, pending, n_parts)
+                .filter(F.col("is_tool")).drop("is_tool")
+                .repartition("part_key"))
 
     CK.run_stage(spark, input_df=src, stage="tool_triples", run_id=run_id,
                  out_dir=tool_dir, ckpt_dir=ckpt_dir,

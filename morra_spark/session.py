@@ -18,13 +18,8 @@ def host_cores() -> int:
     return int(env) if env else len(os.sched_getaffinity(0))
 
 
-def host_driver_mem() -> str:
-    """``$SPARK_DRIVER_MEM``, else ~40% of physical RAM (or of the cgroup
-    ``memory.max`` when lower), capped at 48g: a local-mode JVM heap sized
-    past the box gets the whole test run OOM-killed."""
-    env = os.environ.get("SPARK_DRIVER_MEM")
-    if env:
-        return env
+def host_mem_bytes() -> int:
+    """Physical RAM in bytes, or the cgroup ``memory.max`` when lower."""
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     try:
         with open("/sys/fs/cgroup/memory.max") as f:
@@ -33,7 +28,17 @@ def host_driver_mem() -> str:
             ram = min(ram, int(limit))
     except OSError:
         pass
-    return f"{max(1, min(48, int(ram * 0.4) // 2**30))}g"
+    return ram
+
+
+def host_driver_mem() -> str:
+    """``$SPARK_DRIVER_MEM``, else ~40% of ``host_mem_bytes()``, capped at
+    48g: a local-mode JVM heap sized past the box gets the whole test run
+    OOM-killed."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    return f"{max(1, min(48, int(host_mem_bytes() * 0.4) // 2**30))}g"
 
 
 def get_spark(

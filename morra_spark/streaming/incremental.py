@@ -96,23 +96,19 @@ def make_batch_writer(out_dir: str, candidates, model_bc,
     replaces its own output rather than double-appending. Readers load
     ``{out_dir}/triples`` and see batch_id as a partition column.
 
-    Tool turns are aligned WITHIN the micro-batch (single-window union
-    form, ``extract_triples_with_tools``); a tool turn whose invoking
+    Tool turns are aligned WITHIN the micro-batch (the batch rule,
+    ``pipeline.align_tool_turns``); a tool turn whose invoking
     turn landed in an earlier batch emits nothing HERE — cross-batch
     alignment is provided by the keyed-state operator in
     ``streaming.stateful`` (``applyInPandasWithState`` on conv_id).
     """
     from pyspark.sql import DataFrame
 
-    from morra_spark.operators.tagger import extract_turn_triples
-    from morra_spark.plans import checkpoint as CK
-    from morra_spark.plans.pipeline import extract_triples_with_tools
+    from morra_spark.plans.pipeline import align_tool_turns, content_triples
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        content = batch_df.filter(F.col("role") != "tool")
-        ann = CK.add_part_key(extract_turn_triples(content, model_bc),
-                              n_parts)
-        out = extract_triples_with_tools(ann, candidates, batch_df, n_parts)
+        content = content_triples(batch_df, model_bc, candidates, n_parts)
+        out = align_tool_turns(content, batch_df, n_parts).drop("is_tool")
         (out.repartition("part_key")
             .write.mode("overwrite").partitionBy("part_key")
             .parquet(f"{out_dir}/triples/batch_id={batch_id}"))

@@ -10,7 +10,7 @@ cut. This module closes it with per-conversation keyed state:
   reduced to one narrow row per turn carrying the turn's alignment
   subject = min (subj, subj_ne) over its triples, null when the turn
   emitted none — the identical rule to the batch window form
-  (`pipeline.extract_triples_with_tools`) and the fixtures' gold;
+  (`pipeline.align_tool_turns`) and the fixtures' gold;
 * `groupBy(conv_id).applyInPandasWithState` keeps (last seen turn_idx,
   current invoking subject) per conversation — O(1) state per conv, no
   buffering of turns — and emits a `used_tool` triple for every tool
@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-TOOL_PRED = "used_tool"
+from morra_spark.plans.pipeline import TOOL_PRED
 
 ALIGN_INPUT_SCHEMA = ("conv_id string, turn_idx int, role string, "
                       "tool string, ts timestamp, subj string, "
@@ -274,8 +274,8 @@ def backfill_tool_triples(spark: SparkSession, *, transcripts_path: str,
        ``conv_ids`` (at 10^12 turns: the conversations in the replayed
        range, a partition-prunable filter);
     2. recompute tool triples through the batch path
-       (``extract_triples_with_tools`` — the same alignment rule the
-       stateful operator implements incrementally);
+       (``align_tool_turns``, tool-origin rows only — the same alignment
+       rule the stateful operator implements incrementally);
     3. anti-join what streaming ALREADY emitted on the FULL row
        identity (all seven triple columns): rows the stream got right
        are never duplicated, while a streamed row with a stale/wrong
@@ -302,25 +302,22 @@ def backfill_tool_triples(spark: SparkSession, *, transcripts_path: str,
     "batch_id": int}``.
     """
     from morra_spark.model_artifact import KGModel
-    from morra_spark.plans import checkpoint as CK
-    from morra_spark.plans.pipeline import (entity_candidates_df,
-                                            extract_triples_with_tools)
-    from morra_spark.operators.tagger import extract_turn_triples
+    from morra_spark.plans.pipeline import (align_tool_turns,
+                                            content_triples,
+                                            entity_candidates_df)
 
     model = KGModel.load(model_path)
-    bc = spark.sparkContext.broadcast(model)
     src = (spark.read.parquet(transcripts_path)
            .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
            .dropDuplicates(["conv_id", "turn_idx"]))
     if conv_ids is not None:
         src = src.filter(F.col("conv_id").isin(conv_ids))
-    content = src.filter(F.col("role") != "tool")
-    ann = CK.add_part_key(extract_turn_triples(content, bc), n_parts)
-    want = (extract_triples_with_tools(
-        ann, entity_candidates_df(spark, model), src, n_parts)
-        .filter(F.col("pred") == TOOL_PRED)
-        .select("conv_id", "turn_idx", "subj", "pred", "obj",
-                "subj_ne", "obj_ne"))
+    content = content_triples(src, spark.sparkContext.broadcast(model),
+                              entity_candidates_df(spark, model), n_parts)
+    want = (align_tool_turns(content, src, n_parts)
+            .filter(F.col("is_tool"))
+            .select("conv_id", "turn_idx", "subj", "pred", "obj",
+                    "subj_ne", "obj_ne"))
 
     sink = f"{out_dir}/tool_triples"
     max_prev = BACKFILL_BATCH_BASE - 1

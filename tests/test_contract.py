@@ -119,3 +119,21 @@ def test_driver_window_holds_the_intended_first_50():
         "dedup_minhash_lsh_fast", "ann_ivf_topk",
         "multimodal_phash_dedup", "multimodal_audio_features",
     }, rows_only_in_window
+
+
+def test_bench_scaling_refuses_a_host_too_small_before_any_jvm():
+    """``bench.py --scaling`` runs up to local-cluster[8,2,8192]: on a
+    host with fewer cores or less memory it exits 2 with a message that
+    names what it needs and what the host gives, before starting Spark."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.abspath(E.__file__))
+    r = subprocess.run(
+        [sys.executable, os.path.join(repo, "bench.py"), "--scaling"],
+        capture_output=True, text=True, timeout=60,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="2"))
+    assert r.returncode == 2, r.stderr
+    assert "needs 16 cores and 64 GiB" in r.stderr, r.stderr
+    assert "this host gives 2 cores" in r.stderr, r.stderr

@@ -905,6 +905,26 @@ def test_ann_benchmark_recall_monotone_and_full_probe(spark):
     assert [s2["sweep"][n]["recall_at_k"] for n in (1, 2, 4)] == recalls
 
 
+def test_ann_benchmark_reranks_near_ties_at_full_precision(spark):
+    """Two candidates that tie at ann_ivf_topk's 4-decimal cosine but
+    not at full precision, cut at the k boundary: the IVF re-rank must
+    order them like the brute-force truth, so probing every bucket
+    gives recall 1.0. Query q = (1, 1) has computed self-cosine
+    0.9999999999999998; b = (3, 3) scores exactly 1.0 against it, and
+    a (a copy of q with a lower vec_id) 0.9999999999999998. So q's k+1
+    = 2 candidates are b and a, without q itself. On the rounded cosine
+    both read 1.0 and vec_id would keep a, while truth keeps b."""
+    from morra_spark.plans.annbench import run_ann_benchmark
+
+    emb = spark.createDataFrame(
+        [("a", [1.0, 1.0]), ("b", [3.0, 3.0]), ("q", [1.0, 1.0])],
+        "vec_id string, embedding array<float>")
+    s = run_ann_benchmark(emb, n_queries=3, k=1, n_centroids=1,
+                          nprobes=(1,))
+    assert s["n_truth_rows"] == 3
+    assert s["sweep"][1]["recall_at_k"] == 1.0
+
+
 def test_ann_benchmark_validation_and_zero_vector_drop(spark):
     """nprobe<=0 / n_queries<1 raise instead of reporting fake
     operating points; a zero-norm vector (NaN cosine, which desc-sorts

@@ -116,3 +116,31 @@ def test_incremental_noop_when_unchanged(spark, fixture_dir, model_path,
                           n_parts=N_PARTS)
     assert res["affected_part_keys"] == []
     assert res["n_triples"] == res0["n_triples"]
+
+
+def test_incremental_raises_when_stale_partition_delete_fails(
+        spark, tmp_path, monkeypatch):
+    """Hadoop's FileSystem.delete reports most failures by returning
+    false. A refresh that ignored it would re-run the pipeline over a
+    stale partition directory and silently break incremental ≡ full
+    rebuild, so it must raise before run_pipeline is reached."""
+    from types import SimpleNamespace as NS
+
+    from morra_spark.plans import incremental_kg as IK
+    from morra_spark.streaming import deltastore
+
+    jvm = NS(org=NS(apache=NS(hadoop=NS(fs=NS(Path=str)))))
+    fs = NS(exists=lambda p: True, delete=lambda p, recursive: False)
+
+    def never(*a, **kw):
+        raise AssertionError("run_pipeline reached after a failed delete")
+
+    monkeypatch.setattr(IK, "affected_part_keys", lambda *a, **kw: [3])
+    monkeypatch.setattr(deltastore, "fs_handles",
+                        lambda spark, path: (jvm, fs))
+    monkeypatch.setattr(IK, "run_pipeline", never)
+    out = str(tmp_path / "out")
+    with pytest.raises(IOError, match="part_key=3"):
+        IK.run_incremental(spark, old_transcripts_path="v1",
+                           new_transcripts_path="v2", out_dir=out,
+                           model_path="unused", n_parts=N_PARTS)

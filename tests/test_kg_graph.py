@@ -13,18 +13,15 @@ def triples(spark, fixture_dir, model):
     """The materializer's real input: the pipeline's emitted triples
     (NE columns included), produced by the same annotate + link path
     the batch runner uses."""
-    from morra_spark.operators.tagger import extract_turn_triples
-    from morra_spark.plans import checkpoint as CK
-    from morra_spark.plans.pipeline import (entity_candidates_df,
-                                            extract_triples_with_tools)
+    from morra_spark.plans.pipeline import (align_tool_turns,
+                                            content_triples,
+                                            entity_candidates_df)
 
     bc = spark.sparkContext.broadcast(model)
     src = spark.read.parquet(f"{fixture_dir}/transcripts") \
         .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    content = src.filter(F.col("role") != "tool")
-    ann = CK.add_part_key(extract_turn_triples(content, bc), 16)
-    t = extract_triples_with_tools(
-        ann, entity_candidates_df(spark, model), src, 16) \
+    content = content_triples(src, bc, entity_candidates_df(spark, model), 16)
+    t = align_tool_turns(content, src, 16) \
         .select("conv_id", "turn_idx", "subj", "pred", "obj",
                 "subj_ne", "obj_ne").persist()
     t.count()

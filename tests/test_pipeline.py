@@ -5,6 +5,7 @@ import glob
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from morra_spark.plans.evaluate import token_accuracy, triple_pr
 
@@ -236,6 +237,106 @@ def test_tool_turns_emit_only_used_tool_triples(spark, pipeline_out, fixture_dir
     # tool turns; both sides must agree on those skips (checked by the
     # set equality above), and they must actually occur in the fixture
     assert gold.count() < tools.count()
+
+
+# Hand-built turns and content triples for the tool-alignment rule:
+# (conv_id, turn_idx, role, tool) and (conv_id, turn_idx, subj, pred, obj,
+# subj_ne, obj_ne). Cases: c1 a min-subj tie broken on subj_ne, then two
+# consecutive tool turns; c2 a triple-less invoking turn that blocks the
+# older content turn; c3 a tool turn with no preceding content turn and
+# one with a null tool name; c4/c5 content triples whose predicate lemma
+# is literally 'used_tool' (the tokenizer keeps underscores).
+_ALIGN_TURNS = [
+    ("c1", 0, "user", None), ("c1", 1, "tool", "search"),
+    ("c1", 2, "tool", "calc"), ("c1", 3, "assistant", None),
+    ("c2", 0, "user", None), ("c2", 1, "assistant", None),
+    ("c2", 2, "tool", "search"),
+    ("c3", 0, "tool", "calc"), ("c3", 1, "user", None),
+    ("c3", 2, "tool", None), ("c3", 3, "tool", "search"),
+    ("c4", 0, "assistant", None), ("c4", 1, "tool", "search"),
+    ("c5", 0, "user", None), ("c5", 1, "tool", "calc"),
+]
+_ALIGN_CONTENT = [
+    ("c1", 0, "bob", "met", "carl", "PERSON", "PERSON"),
+    ("c1", 0, "amy", "met", "dora", "PERSON", "PERSON"),
+    ("c1", 0, "amy", "owns", "acme", "ORG", "ORG"),
+    ("c1", 3, "eve", "met", "bob", "PERSON", "PERSON"),
+    ("c2", 0, "zoe", "met", "amy", "PERSON", "PERSON"),
+    ("c3", 1, "kim", "met", "lee", "PERSON", "PERSON"),
+    ("c4", 0, "amy", "used_tool", "grep", "PERSON", "O"),
+    ("c4", 0, "bob", "met", "carl", "PERSON", "PERSON"),
+    ("c5", 0, "dan", "used_tool", "sed", "PERSON", "O"),
+]
+
+
+def _gold_tool_rows(turns, content):
+    """The fixtures' gold rule in plain Python: a tool turn with a tool
+    name is attributed to the nearest preceding non-tool turn of its
+    conversation, with subject = min (subj, subj_ne) over ALL that
+    turn's content triples; no triples there, no tool triple."""
+    by_turn = {}
+    for c, i, subj, _p, _o, subj_ne, _one in content:
+        by_turn.setdefault((c, i), []).append((subj, subj_ne))
+    out, last = set(), {}
+    for c, i, role, tool in sorted(turns):
+        if role != "tool":
+            last[c] = i
+        elif tool is not None and by_turn.get((c, last.get(c))):
+            subj, subj_ne = min(by_turn[(c, last[c])])
+            out.add((c, i, subj, "used_tool", tool, subj_ne, "Tool"))
+    return out
+
+
+@pytest.mark.parametrize("path", ["live", "stage2"])
+def test_tool_alignment_rule_matches_gold_reference(spark, model_path,
+                                                    tmp_path, path):
+    """The one tool-alignment rule against a Python reference of the
+    gold, on hand-built rows: ``align_tool_turns`` over live content
+    rows (selecting tool-origin rows), and production stage 2 of
+    ``run_pipeline`` over the same rows materialized as the stage-1
+    parquet (stage 1 is checkpoint-marked done, so only stage 2 runs)."""
+    import datetime
+
+    from morra_spark.plans import checkpoint as CK
+
+    n_parts = 4
+    ts = datetime.datetime(2024, 1, 1)
+    turns = spark.createDataFrame(
+        [(c, i, r, "text", t, ts) for c, i, r, t in _ALIGN_TURNS],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp")
+    content = CK.add_part_key(spark.createDataFrame(
+        _ALIGN_CONTENT, "conv_id string, turn_idx int, subj string,"
+        " pred string, obj string, subj_ne string, obj_ne string"), n_parts)
+    cols = ["conv_id", "turn_idx", "subj", "pred", "obj", "subj_ne",
+            "obj_ne"]
+    want = _gold_tool_rows(_ALIGN_TURNS, _ALIGN_CONTENT)
+    assert {r[0] for r in want} == {"c1", "c3", "c4", "c5"}
+
+    if path == "live":
+        from morra_spark.plans.pipeline import align_tool_turns
+
+        aligned = align_tool_turns(content, turns, n_parts)
+        got = aligned.filter(F.col("is_tool")).select(cols).collect()
+        kept = aligned.filter(~F.col("is_tool")).select(cols).collect()
+        assert sorted(map(tuple, kept)) == sorted(_ALIGN_CONTENT)
+    else:
+        from morra_spark.plans.pipeline import run_pipeline
+
+        out, rid = str(tmp_path / "out"), "r1"
+        turns.write.parquet(str(tmp_path / "transcripts"))
+        content.write.partitionBy("part_key") \
+            .parquet(f"{out}/triples/source=content")
+        stats = CK.partition_fingerprints(CK.add_part_key(turns, n_parts)) \
+            .withColumn("n_out", F.lit(0))
+        CK.write_checkpoint(spark, f"{out}/checkpoint", rid,
+                            "extract_triples", stats)
+        run_pipeline(spark, transcripts_path=str(tmp_path / "transcripts"),
+                     out_dir=out, model_path=model_path, run_id=rid,
+                     n_parts=n_parts)
+        got = spark.read.parquet(f"{out}/triples/source=tool") \
+            .select(cols).collect()
+    assert sorted(map(tuple, got)) == sorted(want)
 
 
 def test_chunked_reassembly_concatenates_to_exact_order(spark, fixture_dir):

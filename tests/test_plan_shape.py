@@ -29,17 +29,13 @@ def _broadcast_exchanges(plan: str) -> int:
 def test_triple_path_is_map_only(spark, fixture_dir, model):
     """scan → mapInPandas → explode → 2 broadcast joins: ZERO shuffle
     exchanges after the (possible) input re-balance."""
-    from morra_spark.model_artifact import KGModel
-    from morra_spark.operators.tagger import extract_turn_triples
-    from morra_spark.plans import checkpoint as CK
-    from morra_spark.plans.pipeline import entity_candidates_df, extract_triples
+    from morra_spark.plans.pipeline import (content_triples,
+                                            entity_candidates_df)
 
     bc = spark.sparkContext.broadcast(model)
     src = (spark.read.parquet(f"{fixture_dir}/transcripts")
-           .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-           .filter(F.col("role") != "tool"))
-    ann = CK.add_part_key(extract_turn_triples(src, bc), 64)
-    t = extract_triples(ann, entity_candidates_df(spark, model))
+           .select("conv_id", "turn_idx", "role", "text", "tool", "ts"))
+    t = content_triples(src, bc, entity_candidates_df(spark, model), 64)
 
     plan = _spark_plan(t)
     # the only shuffles allowed are the ranking window on the TINY
@@ -100,18 +96,13 @@ def test_triple_sink_exchange_is_salted_by_turn_hash(spark, fixture_dir,
     to a single write task (bench.run_hot_pair measures the wall-clock
     consequence; this pins the plan property at any scale, since plan
     shape is input-size invariant)."""
-    from morra_spark.model_artifact import KGModel  # noqa: F401
-    from morra_spark.operators.tagger import extract_turn_triples
-    from morra_spark.plans import checkpoint as CK
-    from morra_spark.plans.pipeline import (entity_candidates_df,
-                                            extract_triples)
+    from morra_spark.plans.pipeline import (content_triples,
+                                            entity_candidates_df)
 
     bc = spark.sparkContext.broadcast(model)
     src = (spark.read.parquet(f"{fixture_dir}/transcripts")
-           .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-           .filter(F.col("role") != "tool"))
-    ann = CK.add_part_key(extract_turn_triples(src, bc), 64)
-    out = extract_triples(ann, entity_candidates_df(spark, model)) \
+           .select("conv_id", "turn_idx", "role", "text", "tool", "ts"))
+    out = content_triples(src, bc, entity_candidates_df(spark, model), 64) \
         .repartition(F.col("part_key"),
                      F.pmod(F.xxhash64("turn_idx"), F.lit(8)))
     plan = _spark_plan(out)
@@ -128,20 +119,15 @@ def test_flagship_with_tools_annotates_once(spark, fixture_dir, model):
     DataFrame twice doubled the perceptron work and collapsed N->4N
     scaling to 0.26). Exactly one MapInPandas; the skeleton branch reads
     the raw scan."""
-    from pyspark.sql import functions as F
-
-    from morra_spark.operators.tagger import extract_turn_triples
-    from morra_spark.plans import checkpoint as CK
-    from morra_spark.plans.pipeline import (entity_candidates_df,
-                                            extract_triples_with_tools)
+    from morra_spark.plans.pipeline import (align_tool_turns,
+                                            content_triples,
+                                            entity_candidates_df)
 
     bc = spark.sparkContext.broadcast(model)
     src = (spark.read.parquet(f"{fixture_dir}/transcripts")
            .select("conv_id", "turn_idx", "role", "text", "tool", "ts"))
-    content = src.filter(F.col("role") != "tool")
-    ann = CK.add_part_key(extract_turn_triples(content, bc), 64)
-    t = extract_triples_with_tools(ann, entity_candidates_df(spark, model),
-                                   src, 64)
+    content = content_triples(src, bc, entity_candidates_df(spark, model), 64)
+    t = align_tool_turns(content, src, 64)
     plan = _spark_plan(t)
     n_python = sum(plan.count(s) for s in
                    ("MapInPandas", "ArrowEvalPython", "PythonMapInArrow"))
