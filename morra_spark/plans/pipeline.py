@@ -290,6 +290,9 @@ def run_pipeline(spark: SparkSession, *, transcripts_path: str, out_dir: str,
         # the whole job to the affected partitions via a static isin —
         # a literal filter on the partition key, pushed to the scan
         src = src.filter(F.col("part_key").isin(only_part_keys))
+    # fingerprinted once per run: both stages read the same input, so
+    # they share these rows (at most n_parts) instead of each rescanning
+    fingerprints = CK.partition_fingerprints(src).collect()
 
     def transform(pending: DataFrame, _pending_keys: list[int]) -> DataFrame:
         out = content_triples(pending, model_bc, candidates, n_parts)
@@ -305,7 +308,8 @@ def run_pipeline(spark: SparkSession, *, transcripts_path: str, out_dir: str,
             F.col("part_key"),
             F.pmod(F.xxhash64("turn_idx"), F.lit(8)))
 
-    CK.run_stage(spark, input_df=src, stage="extract_triples", run_id=run_id,
+    CK.run_stage(spark, input_df=src, fingerprints=fingerprints,
+                 stage="extract_triples", run_id=run_id,
                  out_dir=content_dir, ckpt_dir=ckpt_dir, transform=transform)
 
     def transform_tools(pending: DataFrame,
@@ -326,7 +330,8 @@ def run_pipeline(spark: SparkSession, *, transcripts_path: str, out_dir: str,
                 .filter(F.col("is_tool")).drop("is_tool")
                 .repartition("part_key"))
 
-    CK.run_stage(spark, input_df=src, stage="tool_triples", run_id=run_id,
+    CK.run_stage(spark, input_df=src, fingerprints=fingerprints,
+                 stage="tool_triples", run_id=run_id,
                  out_dir=tool_dir, ckpt_dir=ckpt_dir,
                  transform=transform_tools)
 

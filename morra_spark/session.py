@@ -80,6 +80,15 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # list up to 1024 partition dirs on the driver: at Spark's default
+        # of 32, every read of a part_key sink (n_parts=64) launched a
+        # 64-task listing job, each task deserializing a full Hadoop
+        # Configuration. The trade: a layout with hundreds of part dirs
+        # on an object store is listed one LIST call at a time by the
+        # driver instead of in parallel; past 1024 Spark goes back to
+        # the parallel listing job.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1024")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -176,6 +176,109 @@ def test_resume_after_crash_between_write_and_checkpoint(
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_fresh_run_fingerprints_input_once(spark, fixture_dir, model_path,
+                                          tmp_path, monkeypatch):
+    """Both stages read the same part-keyed transcripts, so a fresh run
+    fingerprints them once and hands the rows to both ``run_stage``
+    calls, instead of stage 2 rescanning the input for equal values."""
+    from morra_spark.plans import checkpoint as CK
+    from morra_spark.plans.pipeline import run_pipeline
+
+    calls = []
+    fingerprints = CK.partition_fingerprints
+
+    def counted(df):
+        calls.append(df)
+        return fingerprints(df)
+
+    monkeypatch.setattr(CK, "partition_fingerprints", counted)
+    run_pipeline(spark, transcripts_path=f"{fixture_dir}/transcripts",
+                 out_dir=str(tmp_path / "kg"), model_path=str(model_path))
+    assert len(calls) == 1
+
+
+def test_checkpoint_reconciles_with_input_and_sink(spark, fixture_dir,
+                                                  pipeline_out):
+    """Every checkpoint row of a completed run agrees with the data: per
+    stage and part_key, ``n_in``/``input_fingerprint`` are the
+    fingerprints of the part-keyed transcripts, ``n_out`` is the row
+    count of that stage's part_key directory, and the ``n_out`` sum is
+    the run's ``n_triples``."""
+    from morra_spark.plans import checkpoint as CK
+    from morra_spark.plans.pipeline import load_transcripts
+
+    out, res = pipeline_out
+    src = CK.add_part_key(
+        load_transcripts(spark, f"{fixture_dir}/transcripts"), 64)
+    want = {r.part_key: (r.n_in, r.input_fingerprint)
+            for r in CK.partition_fingerprints(src).collect()}
+    ck = spark.read.parquet(f"{out}/checkpoint") \
+        .filter(F.col("run_id") == res["run_id"]).collect()
+    total = 0
+    for stage, source in (("extract_triples", "content"),
+                          ("tool_triples", "tool")):
+        rows = [r for r in ck if r.stage == stage]
+        assert sorted(r.part_key for r in rows) == sorted(want), stage
+        sink = spark.read.parquet(f"{out}/triples/source={source}")
+        n_sink = {r.part_key: r["count"]
+                  for r in sink.groupBy("part_key").count().collect()}
+        for r in rows:
+            assert r.status == "done"
+            assert (r.n_in, r.input_fingerprint) == want[r.part_key], r
+            assert r.n_out == n_sink.get(r.part_key, 0), r
+        total += sum(r.n_out for r in rows)
+    assert total == res["n_triples"]
+
+
+def test_stage2_only_resume_reuses_shared_fingerprints(
+        spark, fixture_dir, model_path, pipeline_out, tmp_path, monkeypatch):
+    """A run that lost only stage-2 work (the ``tool_triples`` checkpoint
+    rows and ``source=tool`` dirs of 3 part_keys) resumes exactly those
+    3 keys in stage 2 without calling the stage-1 transform, and ends on
+    the uninterrupted run's triples and checkpoint rows."""
+    from morra_spark.plans import checkpoint as CK
+    from morra_spark.plans.pipeline import run_pipeline
+
+    ref_out, res = pipeline_out
+    out = str(tmp_path / "kg")
+    shutil.copytree(ref_out, out)
+    victims = [int(d.split("=")[-1]) for d in sorted(
+        glob.glob(f"{out}/triples/source=tool/part_key=*"))[:3]]
+    assert len(victims) == 3
+    for pk in victims:
+        shutil.rmtree(f"{out}/triples/source=tool/part_key={pk}")
+    lost = (F.col("stage") == "tool_triples") & \
+        F.col("part_key").isin(victims)
+    ck = spark.read.parquet(f"{out}/checkpoint")
+    cols = ["stage", "part_key", "n_in", "n_out", "input_fingerprint"]
+    ref_ck = sorted(map(tuple, ck.filter(lost).select(cols).collect()))
+    kept = ck.filter(~lost).collect()
+    shutil.rmtree(f"{out}/checkpoint")
+    spark.createDataFrame(kept, CK.CHECKPOINT_SCHEMA) \
+        .write.parquet(f"{out}/checkpoint")
+
+    calls = []
+    run_stage = CK.run_stage
+
+    def spy(spark, *, stage, transform, **kw):
+        def recorded(pending, pending_keys):
+            calls.append((stage, sorted(pending_keys)))
+            return transform(pending, pending_keys)
+        return run_stage(spark, stage=stage, transform=recorded, **kw)
+
+    monkeypatch.setattr(CK, "run_stage", spy)
+    res2 = run_pipeline(spark, transcripts_path=f"{fixture_dir}/transcripts",
+                        out_dir=out, model_path=str(model_path),
+                        run_id=res["run_id"])
+    assert calls == [("tool_triples", sorted(victims))]
+    a = spark.read.parquet(f"{ref_out}/triples")
+    b = spark.read.parquet(f"{out}/triples")
+    assert res2["n_triples"] == a.count()
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    got_ck = spark.read.parquet(f"{out}/checkpoint").filter(lost)
+    assert sorted(map(tuple, got_ck.select(cols).collect())) == ref_ck
+
+
 def test_reassembly_text_fidelity_and_salting(spark, fixture_dir):
     """Salted two-phase reassembly: per-turn text byte-equal to source,
     and identical to an unsalted single-phase collect (salting
@@ -431,7 +534,9 @@ def test_run_stage_with_empty_output_converges(spark, tmp_path):
         calls.append(sorted(pending_keys))
         return df.filter(F.lit(False))  # everything filtered out
 
-    kw = dict(spark=spark, input_df=inp, stage="s", run_id="r",
+    kw = dict(spark=spark, input_df=inp,
+              fingerprints=CK.partition_fingerprints(inp).collect(),
+              stage="s", run_id="r",
               out_dir=str(tmp_path / "out"),
               ckpt_dir=str(tmp_path / "ck"), transform=transform)
     CK.run_stage(**kw)

@@ -166,6 +166,19 @@ def test_resume_readback_has_static_partition_filters(spark, tmp_path):
     assert pruned.count() == 26  # 13 rows in each of part 1 and 3
 
 
+def test_fresh_checkpoint_read_runs_no_python(spark, tmp_path):
+    """A fresh run's empty done set is built on the JVM: a list-based
+    createDataFrame plans a Python-RDD scan (``ExistingRDD``), which
+    started Python workers on every fresh build."""
+    from morra_spark.plans.checkpoint import read_done_parts
+
+    done = read_done_parts(spark, str(tmp_path / "absent"), "r", "s")
+    plan = _spark_plan(done)
+    assert "ExistingRDD" not in plan, plan
+    assert done.schema.simpleString() == "struct<part_key:int>"
+    assert done.collect() == []
+
+
 def test_ivf_probe_join_broadcasts_and_single_python_stage(spark):
     """IVF search plan shape: the tiny (qid, cid) probe table broadcasts
     against the assigned corpus (the big side never shuffles for

@@ -109,6 +109,31 @@ def test_checkpoint_resume_after_first_write_crash_is_fresh(spark, tmp_path):
     assert done.count() == 0
 
 
+def test_sink_read_lists_part_dirs_on_the_driver(spark, tmp_path):
+    """Reading a 64-part_key sink lists its partition directories on the
+    driver: at most one Spark job of one task (the footer schema read),
+    not a 64-task parallel listing job on every read of a sink."""
+    from pyspark.sql import functions as F
+
+    sink = str(tmp_path / "sink")
+    spark.range(640).select((F.col("id") % 64).cast("int").alias("part_key"),
+                            "id").write.partitionBy("part_key").parquet(sink)
+    sc = spark.sparkContext
+    group = "test_sink_read_listing"
+    sc.setJobGroup(group, "read a 64-part sink")
+    try:
+        df = spark.read.parquet(sink)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.columns == ["id", "part_key"]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job info is async
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = [tracker.getStageInfo(sid).numTasks
+             for jid in jobs for sid in tracker.getJobInfo(jid).stageIds]
+    assert len(jobs) <= 1 and sum(tasks) <= 1, (jobs, tasks)
+
+
 def test_merge_upsert_existing_table_read_failure_propagates(spark, tmp_path):
     """ADVICE r3 medium: a read failure of an EXISTING target must NOT be
     treated as 'first write' — that path rmtree'd the target and replaced
